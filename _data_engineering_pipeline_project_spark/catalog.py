@@ -15,44 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_dir(
-    spark: SparkSession,
-    data_dir: str,
-    tables: tuple[str, ...] = TPCH_TABLES,
-    register_views: bool = False,
-) -> dict[str, DataFrame]:
-    """Load every ``{table}.parquet`` under ``data_dir`` lazily.
-
-    Parquet scans give Catalyst column pruning + predicate/partition
-    pushdown for free — every downstream filter/projection reaches the
-    scan (check via ``df.explain``: PushedFilters / ReadSchema).
-    """
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        path = os.path.join(data_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = table(spark, data_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 # columns stored as parquet TIMESTAMP(NANOS) — Spark has no nanos type, so
 # they are read as long (legacy conf) and truncated to micros, matching
 # DuckDB's nanos→micros truncation.

@@ -8,7 +8,7 @@ vectorized on every executor with zero Python in the hot path.
 from __future__ import annotations
 
 from functools import reduce
-from operator import and_, or_
+from operator import or_
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -56,10 +56,6 @@ def any_null(cols: list[str]) -> Column:
     codegen'd predicate.
     """
     return reduce(or_, [F.col(c).isNull() for c in cols])
-
-
-def all_non_null(cols: list[str]) -> Column:
-    return reduce(and_, [F.col(c).isNotNull() for c in cols])
 
 
 def row_differs(left_prefix: str, right_prefix: str, cols: list[str]) -> Column:

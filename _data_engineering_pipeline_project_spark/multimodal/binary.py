@@ -110,20 +110,6 @@ def fake_decode_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.select(id_col, "payload").mapInPandas(decode, schema=out_schema)
 
 
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Real resize — requires PIL, absent in this container."""
-    if not _HAS_PIL:  # pragma: no cover
-        raise NotImplementedError(
-            "image resize requires PIL/pillow; not available in this environment"
-        )
-    import io
-
-    with Image.open(io.BytesIO(payload)) as im:  # pragma: no cover
-        buf = io.BytesIO()
-        im.resize((width, height)).save(buf, format=im.format or "PNG")
-        return buf.getvalue()
-
-
 def _fake_resize(payload: bytes, width: int, height: int) -> bytes:
     """Deterministic stand-in: 'resample' to width*height bytes by striding
     (downscale) or tiling (upscale) the source bytes."""

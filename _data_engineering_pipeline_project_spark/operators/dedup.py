@@ -396,25 +396,6 @@ def containment_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, i, h): MinHash signature rows — h_i = min over shingles of the
-    universal hash ((2i+1)·x + 11i+7) mod p, x = 60-bit shingle hash mod p.
-
-    One explode + one groupBy(id, i): the signature of a 100 TB corpus is
-    a single shuffle of (doc, i) keys. Deterministic coefficients make the
-    signature reproducible anywhere (incl. the DuckDB oracle).
-    """
-    return minhash_signatures_from_shingles(
-        _shingle_table(df, id_col, text_col, shingle_n), id_col, num_hashes
-    )
-
-
 def minhash_signatures_from_shingles(
     shingle_table: DataFrame, id_col: str = "doc_id", num_hashes: int = 32
 ) -> DataFrame:

@@ -155,9 +155,9 @@ class Scd2Table:
     the classpath (Delta/Iceberg would replace this with ``MERGE INTO``;
     see streaming/microbatch.py for the trigger side). Each ``merge``
     writes the next snapshot AND the history delta to new versioned
-    directories, then commits by atomically swapping a ``_CURRENT``
-    pointer file (``os.replace`` — atomic on POSIX). A reader that opens
-    the table mid-write resolves the pointer to the previous version and
+    directories, then commits by atomically and durably swapping a
+    ``_CURRENT`` pointer file (``streaming/state.py:commit_pointer``).
+    A reader that opens the table mid-write resolves the pointer to the previous version and
     never sees a half-written snapshot; a writer that crashes mid-write
     leaves orphan ``*_v{n+1}`` directories that the retried merge simply
     overwrites. History is per-version delta directories (not a single
@@ -242,28 +242,28 @@ class Scd2Table:
         return best, hb
 
     def _commit(self, version: int, history_base: int | None = None) -> None:
-        """Atomically advance the pointer: write-temp + ``os.replace``."""
-        import json
+        """Atomically and durably advance the pointer
+        (``streaming/state.py:commit_pointer``)."""
         import os
 
+        # local import: the streaming package imports this module
+        from _data_engineering_pipeline_project_spark.streaming.state import (
+            commit_pointer,
+        )
+
         os.makedirs(self.base_dir, exist_ok=True)
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "history_base": (
-                        self._history_base
-                        if history_base is None
-                        else history_base
-                    ),
-                    "delta_floor": getattr(self, "_delta_floor", 0),
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
+        commit_pointer(
+            self._pointer_path(),
+            {
+                "version": version,
+                "history_base": (
+                    self._history_base
+                    if history_base is None
+                    else history_base
+                ),
+                "delta_floor": getattr(self, "_delta_floor", 0),
+            },
+        )
 
     @property
     def version(self) -> int:

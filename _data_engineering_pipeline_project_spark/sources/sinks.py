@@ -47,12 +47,6 @@ def log_check_summary(violations: DataFrame) -> list[tuple[str, str, int]]:
     return out
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S6/S7 — set-level parquet write; chunking (etl2:301) is implicit in
-    partition-parallel tasks."""
-    df.write.mode(mode).parquet(path)
-
-
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 

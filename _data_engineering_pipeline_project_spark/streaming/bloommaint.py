@@ -28,26 +28,28 @@ mismatched reopen fails loudly instead.
 
 from __future__ import annotations
 
-import json
+import glob
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from _data_engineering_pipeline_project_spark.operators.membership import (
     bloom_build,
     bloom_merge,
     bloom_probe,
 )
+from _data_engineering_pipeline_project_spark.streaming.state import (
+    PointerState,
+    VersionedState,
+)
 
 
-class BloomMaintainer:
+class BloomMaintainer(VersionedState):
     """Maintain a Bloom membership filter over the FIRST column of each
     batch (the key relation), versioned under ``base_dir``."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "bloom"
     _STATE_NAME = "words"
 
     def __init__(
@@ -57,87 +59,21 @@ class BloomMaintainer:
         m_bits: int = 1 << 20,
         k: int = 3,
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.m_bits = int(m_bits)
         self.k = int(k)
-        self.state_dir = os.path.join(base_dir, self._STATE_NAME)
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._version, self._last_batch_id = self._recover_version()
+        self._open(spark, base_dir)
 
-    # --- versioned-state plumbing (Scd2Table protocol) -------------------
+    def _geometry(self) -> dict:
+        return {"m_bits": self.m_bits, "k": self.k}
 
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover_version(self) -> tuple[int, int | None]:
-        try:
-            with open(self._pointer_path()) as f:
-                meta = json.load(f)
-            self._checkpoint_token = meta.get("checkpoint_token")
-            if (meta.get("m_bits"), meta.get("k")) != (self.m_bits, self.k):
-                raise ValueError(
-                    "bloom geometry mismatch: state at "
-                    f"{self.base_dir} was built with m_bits="
-                    f"{meta.get('m_bits')}, k={meta.get('k')} but this "
-                    f"maintainer was opened with m_bits={self.m_bits}, "
-                    f"k={self.k}; merging mixed geometry is silent "
-                    "garbage. Reopen with the recorded geometry or "
-                    "rebuild in a fresh base_dir."
-                )
-            return int(meta["version"]), meta.get("last_batch_id")
-        except FileNotFoundError:
-            pass
-        # pointer lost: adopt the highest finished words_v* (the sibling
-        # maintainers' recovery rule). Geometry can't be re-verified
-        # without the pointer — the ctor args are trusted, which is why
-        # the pointer is fsync'd and atomically replaced.
-        best = 0
-        pat = re.compile(rf"^{self._STATE_NAME}_v(\d+)$")
-        if os.path.isdir(self.base_dir):
-            for name in os.listdir(self.base_dir):
-                m = pat.match(name)
-                if m and os.path.exists(
-                    os.path.join(self.base_dir, name, "_SUCCESS")
-                ):
-                    best = max(best, int(m.group(1)))
-        return best, None
-
-    def _commit(self, version: int, batch_id: int | None = None) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "last_batch_id": batch_id,
-                    "checkpoint_token": self._checkpoint_token,
-                    "m_bits": self.m_bits,
-                    "k": self.k,
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-
-    def _already_merged(self, batch_id: int) -> bool:
-        """foreachBatch is at-least-once; bit_or IS idempotent under
-        re-merge, but the watermark keeps the version chain and
-        last_batch_id exactly-once like the siblings."""
-        return (
-            self._last_batch_id is not None
-            and batch_id <= self._last_batch_id
-        )
-
-    @property
-    def version(self) -> int:
-        return self._version
+    def _without_pointer(self) -> dict:
+        # pointer lost: bit_or is idempotent under re-merge, so adopting
+        # the highest finished words_v* is safe. Geometry can't be
+        # re-verified without the pointer — the ctor args are trusted.
+        return {**self._fresh(), "version": self._latest_version()}
 
     def current(self) -> DataFrame | None:
-        if self._version == 0:
-            return None
-        return self.spark.read.parquet(f"{self.state_dir}_v{self._version}")
+        return self._read_state()
 
     # --- filter maintenance ----------------------------------------------
 
@@ -151,7 +87,7 @@ class BloomMaintainer:
         part = bloom_build(batch_df, key, self.m_bits, self.k)
         cur = self.current()
         merged = part if cur is None else bloom_merge(part, cur)
-        nxt = self._version + 1
+        nxt = self.version + 1
         (
             merged.repartitionByRange(
                 max(1, self.spark.sparkContext.defaultParallelism // 4),
@@ -159,11 +95,9 @@ class BloomMaintainer:
             )
             .sortWithinPartitions("word_idx")
             .write.mode("overwrite")
-            .parquet(f"{self.state_dir}_v{nxt}")
+            .parquet(self._state_path(nxt))
         )
-        self._commit(nxt, batch_id)
-        self._version = nxt
-        self._last_batch_id = batch_id
+        self._commit(version=nxt, last_batch_id=batch_id)
 
     def probe(self, df: DataFrame, key: F.Column | str) -> DataFrame:
         """Membership flags for ``df`` against the maintained filter
@@ -174,75 +108,8 @@ class BloomMaintainer:
         key = F.col(key) if isinstance(key, str) else key
         return bloom_probe(cur, df, key, self.m_bits, self.k)
 
-    # --- streaming glue (sibling-maintainer pattern) -----------------------
 
-    def bind_checkpoint(self, token: str) -> None:
-        """Same reset guard as DedupMaintainer.bind_checkpoint: batch
-        ids restart at 0 under a recreated checkpoint and the watermark
-        would absorb real data as redelivery — fail loudly instead."""
-        if self._checkpoint_token is None:
-            self._checkpoint_token = token
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new files from ``source_dir`` into the filter."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                self._guarded_hook(checkpoint_dir)
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def vacuum_versions(self, keep_last: int = 2) -> list[str]:
-        """Drop words_v* dirs older than the last ``keep_last`` committed
-        versions."""
-        import shutil
-
-        removed = []
-        pat = re.compile(
-            re.escape(os.path.basename(self.state_dir)) + r"_v(\d+)$"
-        )
-        for name in os.listdir(self.base_dir):
-            m = pat.match(name)
-            if m and int(m.group(1)) <= self._version - keep_last:
-                shutil.rmtree(os.path.join(self.base_dir, name))
-                removed.append(name)
-        return removed
-
-
-class RotatingBloomMaintainer:
+class RotatingBloomMaintainer(PointerState):
     """Retention-windowed membership: a ring of ``generations``
     independent :class:`BloomMaintainer` slots. Batches merge into the
     CURRENT slot; :meth:`rotate` (called on the retention cadence —
@@ -265,7 +132,7 @@ class RotatingBloomMaintainer:
     LIVE, so keys from a still-in-retention window probed "definitely
     new" — a false negative, the one direction the tier promises never
     to produce. rotate() now (1) commits the advanced pointer with
-    ``needs_reset=true`` (fsync + atomic replace, the house protocol),
+    ``needs_reset=true`` (the durable commit of ``streaming/state.py``),
     (2) resets the slot, (3) commits ``needs_reset=false``. Every
     crash point is safe: before (1) the rotation simply never
     happened; between (1) and (2) recovery sees ``needs_reset`` and
@@ -279,6 +146,8 @@ class RotatingBloomMaintainer:
     """
 
     _POINTER = "_RING"
+    _KIND = "ring"
+    _FRESH = {"current": 0, "rotations": 0, "needs_reset": False}
 
     def __init__(
         self,
@@ -291,61 +160,36 @@ class RotatingBloomMaintainer:
         if generations < 2:
             raise ValueError("need at least 2 generations to rotate")
         self.spark = spark
-        self.base_dir = base_dir
         self.generations = int(generations)
         self.m_bits = int(m_bits)
         self.k = int(k)
-        os.makedirs(base_dir, exist_ok=True)
-        self._current, self._rotations, needs_reset = self._recover()
+        self._open(base_dir)
         self._slots = [
             BloomMaintainer(
                 spark, os.path.join(base_dir, f"gen_{g}"), m_bits, k
             )
             for g in range(self.generations)
         ]
-        if needs_reset:
+        if self._meta["needs_reset"]:
             # a crash interrupted rotate() after the pointer advanced:
             # finish the rotation BEFORE any merge/probe can see the
             # stale (aged-out) keys still sitting in the current slot
-            self._reset_slot(self._current)
-            self._commit_ring(needs_reset=False)
+            self._reset_slot(self.current_slot)
+            self._commit(needs_reset=False)
 
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
+    def _geometry(self) -> dict:
+        return {"generations": self.generations}
 
-    def _recover(self) -> tuple[int, int, bool]:
-        try:
-            with open(self._pointer_path()) as f:
-                meta = json.load(f)
-            if meta.get("generations") != self.generations:
-                raise ValueError(
-                    "ring geometry mismatch: state has "
-                    f"{meta.get('generations')} generations, maintainer "
-                    f"opened with {self.generations}"
-                )
-            return (
-                int(meta["current"]),
-                int(meta["rotations"]),
-                bool(meta.get("needs_reset", False)),
-            )
-        except FileNotFoundError:
-            return 0, 0, False
-
-    def _commit_ring(self, needs_reset: bool = False) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "current": self._current,
-                    "rotations": self._rotations,
-                    "generations": self.generations,
-                    "needs_reset": needs_reset,
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
+    def _orphans(self) -> list[str]:
+        # slots holding committed words: without the ring pointer the
+        # current slot and a pending reset are unknown, and a guess could
+        # reset a slot still inside the retention window
+        done = glob.glob(
+            os.path.join(self.base_dir, "gen_*", "words_v*", "_SUCCESS")
+        )
+        return sorted(
+            {os.path.relpath(p, self.base_dir).split(os.sep)[0] for p in done}
+        )
 
     def _reset_slot(self, g: int) -> None:
         """Wipe slot ``g`` and rebuild a fresh (empty) maintainer for
@@ -361,10 +205,10 @@ class RotatingBloomMaintainer:
 
     @property
     def current_slot(self) -> int:
-        return self._current
+        return self._meta["current"]
 
     def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._slots[self._current].merge_batch(batch_df, batch_id)
+        self._slots[self.current_slot].merge_batch(batch_df, batch_id)
 
     def rotate(self) -> int:
         """Advance the ring: commit the advanced pointer (flagged
@@ -373,12 +217,14 @@ class RotatingBloomMaintainer:
         never leave a wiped slot officially live (lost membership =
         false negatives); the worst crash residue is a pending reset
         that recovery completes. Returns the new current slot."""
-        nxt = (self._current + 1) % self.generations
-        self._current = nxt
-        self._rotations += 1
-        self._commit_ring(needs_reset=True)
+        nxt = (self.current_slot + 1) % self.generations
+        self._commit(
+            current=nxt,
+            rotations=self._meta["rotations"] + 1,
+            needs_reset=True,
+        )
         self._reset_slot(nxt)
-        self._commit_ring(needs_reset=False)
+        self._commit(needs_reset=False)
         return nxt
 
     def live_words(self) -> DataFrame | None:

@@ -4,8 +4,8 @@
 ``streaming/policy.py:rebootstrap_decision`` emits the one-row verdict
 (drift / balance / recall-floor evidence + artifact paths); until now
 nothing performed the swap. ``BlueGreenIndex`` is the executor: a
-generation directory per index build plus ONE fsync'd serving pointer
-(the house pointer protocol), so re-bootstrapping a frozen-quantizer
+generation directory per index build plus ONE durable serving pointer
+(``streaming/state.py``), so re-bootstrapping a frozen-quantizer
 index (IVF-OPQ, SemDeDup, near-dup hot-list, Bloom geometry — anything
 whose identity is frozen at bootstrap) is:
 
@@ -18,9 +18,9 @@ whose identity is frozen at bootstrap) is:
    swap loudly — a rebuilt index that audits worse than the floor must
    never reach serving, and an EMPTY panel is a monitoring failure,
    not evidence of health (the policy.py rule);
-3. **flip** — the serving pointer is rewritten atomically (tmp +
-   fsync + rename). Readers that resolved the pointer before the flip
-   finish on blue; new resolutions read green.
+3. **flip** — the serving pointer is rewritten atomically and durably
+   (tmp + fsync + rename + directory fsync). Readers that resolved the
+   pointer before the flip finish on blue; new resolutions read green.
 
 Crash discipline — NO ORPHAN ADOPTION: the generation counter is
 committed to the pointer BEFORE the build starts, so a crash anywhere
@@ -40,14 +40,16 @@ failed re-bootstrap, each attributable to the decision row's evidence.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame
 
-_POINTER = "_SERVING"
+from _data_engineering_pipeline_project_spark.streaming.state import (
+    PointerState,
+)
+
 _FORMAT = "bluegreen-v1"
 # pointer history is an audit LOG, not unbounded state: older entries
 # roll off (counters keep the lifetime totals) so the fsync'd pointer
@@ -55,80 +57,41 @@ _FORMAT = "bluegreen-v1"
 _HISTORY_KEEP = 200
 
 
-class BlueGreenIndex:
+class BlueGreenIndex(PointerState):
     """Versioned index generations under ``base_dir`` with one fsync'd
     serving pointer. ``serving_dir()`` is what query paths resolve;
     ``swap()`` executes a re-bootstrap decision end to end."""
 
+    _POINTER = "_SERVING"
+    _KIND = "blue/green"
+    _FRESH = {
+        "serving_gen": None,
+        "next_gen": 0,
+        "history": [],
+        "history_total": 0,
+    }
+
     def __init__(self, base_dir: str):
-        self.base_dir = base_dir
-        os.makedirs(base_dir, exist_ok=True)
-        self._meta = self._recover()
+        self._open(base_dir)
 
-    # --- pointer protocol --------------------------------------------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, _POINTER)
+    def _geometry(self) -> dict:
+        return {"format": _FORMAT}
 
-    def _recover(self) -> dict:
-        try:
-            with open(self._pointer_path()) as fh:
-                try:
-                    meta = json.load(fh)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"corrupt {_POINTER} pointer at {self.base_dir} "
-                        f"(invalid JSON: {e}); the serving generation and "
-                        "counter live only in the pointer. Restore it from "
-                        "backup — do NOT guess a generation to serve."
-                    ) from e
-            if meta.get("format") != _FORMAT:
-                raise ValueError(
-                    f"blue/green state at {self.base_dir} has format "
-                    f"{meta.get('format')!r}, expected {_FORMAT!r}"
-                )
-            return meta
-        except FileNotFoundError:
-            pass
-        # gen dirs without a pointer are NOT adoptable (torn-build risk)
-        if os.path.isdir(self.base_dir):
-            debris = [
-                n for n in os.listdir(self.base_dir) if n.startswith("gen_")
-            ]
-            if debris:
-                raise ValueError(
-                    f"blue/green state at {self.base_dir} has generation "
-                    f"dirs ({sorted(debris)}) but no {_POINTER} pointer; "
-                    "a generation without a pointer record cannot be "
-                    "distinguished from a torn build. Restore the pointer "
-                    "or start a fresh base_dir."
-                )
+    def _orphans(self) -> list[str]:
+        # gen dirs without a pointer are NOT adoptable: a generation
+        # without a pointer record cannot be told from a torn build
+        return sorted(
+            n for n in os.listdir(self.base_dir) if n.startswith("gen_")
+        )
+
+    def _with_history(self, report: dict) -> dict:
+        """The pointer fields that append one report, trimming the log
+        to ``_HISTORY_KEEP`` entries (an unconditional-swap scheduler
+        would otherwise grow the fsync'd pointer without bound)."""
         return {
-            "format": _FORMAT,
-            "serving_gen": None,
-            "next_gen": 0,
-            "history": [],
-            "history_total": 0,
+            "history": [*self._meta["history"], report][-_HISTORY_KEEP:],
+            "history_total": int(self._meta["history_total"]) + 1,
         }
-
-    def _with_history(self, meta: dict, report: dict) -> dict:
-        """Append one report, trimming the log to ``_HISTORY_KEEP``
-        entries (review r13: an unconditional-swap scheduler would
-        otherwise grow the fsync'd pointer without bound)."""
-        hist = [*meta["history"], report][-_HISTORY_KEEP:]
-        return {
-            **meta,
-            "history": hist,
-            "history_total": int(meta.get("history_total", 0)) + 1,
-        }
-
-    def _commit(self, meta: dict) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._pointer_path())
-        self._meta = meta
 
     # --- resolution ----------------------------------------------------------
     def _gen_dir(self, gen: int) -> str:
@@ -182,7 +145,7 @@ class BlueGreenIndex:
                 "evidence": evidence,
                 "serving_gen": self._meta["serving_gen"],
             }
-            self._commit(self._with_history(self._meta, report))
+            self._commit(**self._with_history(report))
             return report
         if min_recall is not None and audit_fn is None:
             raise ValueError("min_recall set but no audit_fn to measure it")
@@ -190,7 +153,7 @@ class BlueGreenIndex:
         # 1. allocate the generation FIRST (committed counter — a crash
         #    during build leaves debris a later attempt never reuses)
         gen = int(self._meta["next_gen"])
-        self._commit({**self._meta, "next_gen": gen + 1})
+        self._commit(next_gen=gen + 1)
         gen_dir = self._gen_dir(gen)
         build_fn(gen_dir)
 
@@ -219,7 +182,7 @@ class BlueGreenIndex:
                     "mean_recall": mean_recall,
                     "serving_gen": self._meta["serving_gen"],
                 }
-                self._commit(self._with_history(self._meta, report))
+                self._commit(**self._with_history(report))
                 raise ValueError(report["reason"])
 
         # 3. atomic flip
@@ -231,9 +194,7 @@ class BlueGreenIndex:
             "min_recall": min_recall,
             "evidence": evidence,
         }
-        self._commit(
-            {**self._with_history(self._meta, report), "serving_gen": gen}
-        )
+        self._commit(**self._with_history(report), serving_gen=gen)
         return report
 
     # --- maintenance -----------------------------------------------------------

@@ -19,8 +19,8 @@ O(batch) + O(vocabulary) cost per tick, never O(corpus):
   long-count division Spark's ``avg`` performs inside the one-shot
   build, which is what makes incrementally-served scores bit-identical
   to a one-shot rebuild (test-pinned).
-- **commit** follows the house pointer protocol (``Scd2Table`` /
-  ``AggMaintainer``): batch postings and the merged ``meta_v{N}``
+- **commit** follows the versioned-state protocol
+  (``streaming/state.py``): batch postings and the merged ``meta_v{N}``
   (dictionary, stats, params) land fully before the ``_CURRENT``
   pointer swaps, so a crash leaves the previous version serving and an
   orphan directory, never a torn index. foreachBatch redelivery is a
@@ -42,26 +42,35 @@ world per cycle).
 
 from __future__ import annotations
 
-import json
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _data_engineering_pipeline_project_spark.operators import textstats as TS
+from _data_engineering_pipeline_project_spark.streaming.state import (
+    VersionedState,
+)
 
-_POINTER = "_CURRENT"
 _FORMAT = "dl-in-postings-v2"
 
 
-class Bm25Maintainer:
+class Bm25Maintainer(VersionedState):
     """Maintain a served BM25 index over append-only document batches.
 
     ``serve_index()`` returns the same dict shape as
     ``ranking.load_bm25_index``, so ``ranking.bm25_scores_from_index``
     serves from a maintained index unchanged.
+
+    A lost pointer is refused: committed state is a ``meta_v*`` dir PLUS
+    an ordered batch list only the pointer records, and a half-written
+    postings dir is indistinguishable from a committed one.
     """
+
+    _KIND = "BM25"
+    _STATE_NAME = "meta"
+    _MARKER = os.path.join("stats", "_SUCCESS")
+    _FRESH = {**VersionedState._FRESH, "batches": []}
 
     def __init__(
         self,
@@ -71,77 +80,13 @@ class Bm25Maintainer:
         text_col: str = "text",
         files_per_batch: int = 4,
     ) -> None:
-        self.spark = spark
-        self.base_dir = base_dir
         self.id_col = id_col
         self.text_col = text_col
         self.files_per_batch = files_per_batch
-        os.makedirs(base_dir, exist_ok=True)
-        self._meta = self._recover()
+        self._open(spark, base_dir)
 
-    # -- pointer protocol -------------------------------------------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, _POINTER)
-
-    def _recover(self) -> dict:
-        try:
-            with open(self._pointer_path()) as fh:
-                meta = json.load(fh)
-            if meta.get("format") != _FORMAT:
-                raise ValueError(
-                    f"BM25 maintainer state at {self.base_dir} has format "
-                    f"{meta.get('format')!r}, expected {_FORMAT!r} — rebuild"
-                )
-            return meta
-        except FileNotFoundError:
-            pass
-        # pointer lost: unlike the bloom/agg maintainers, committed
-        # state here is a meta dir PLUS an ordered batch list only the
-        # pointer records — the postings dirs alone cannot be safely
-        # re-adopted (a half-written batch dir is indistinguishable
-        # from a committed one). Silently returning version 0 would
-        # RESTART the index over live state — fail loudly instead
-        # (adversarial-artifact sweep r11).
-        if os.path.isdir(self.base_dir):
-            orphaned = [
-                n
-                for n in os.listdir(self.base_dir)
-                if re.match(r"^meta_v(\d+)$", n)
-                and os.path.exists(
-                    os.path.join(self.base_dir, n, "stats", "_SUCCESS")
-                )
-            ]
-            if orphaned:
-                raise ValueError(
-                    f"BM25 maintainer state at {self.base_dir} has "
-                    f"committed meta dirs ({sorted(orphaned)}) but no "
-                    f"{_POINTER} pointer; the batch ordering lives "
-                    "only in the pointer, so this state cannot be "
-                    "safely adopted. Restore the pointer from backup or "
-                    "rebuild in a fresh base_dir."
-                )
-        return {
-            "version": 0,
-            "last_batch_id": None,
-            "batches": [],
-            "format": _FORMAT,
-        }
-
-    def _commit(self, meta: dict) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._pointer_path())
-        self._meta = meta
-
-    @property
-    def version(self) -> int:
-        return self._meta["version"]
-
-    def _meta_dir(self, version: int) -> str:
-        return os.path.join(self.base_dir, f"meta_v{version}")
+    def _geometry(self) -> dict:
+        return {"format": _FORMAT}
 
     def _batch_dir(self, name: str) -> str:
         return os.path.join(self.base_dir, "postings", name)
@@ -152,8 +97,7 @@ class Bm25Maintainer:
         tokenize + postings write, O(vocab) dictionary merge, O(1)
         stats merge. Redelivered batch ids at or below the watermark
         are no-ops."""
-        last = self._meta["last_batch_id"]
-        if last is not None and batch_id <= last:
+        if self._already_merged(batch_id):
             return
         bname = f"b{batch_id}"
         dl = batch_df.select(
@@ -196,7 +140,7 @@ class Bm25Maintainer:
         v = self._meta["version"]
         if v > 0:
             cur_dict = self.spark.read.parquet(
-                os.path.join(self._meta_dir(v), "dictionary")
+                os.path.join(self._state_path(v), "dictionary")
             ).select("term", F.col("df").alias("_df"))
             merged_dict = batch_dict.join(cur_dict, "term", "full_outer").select(
                 "term",
@@ -208,7 +152,7 @@ class Bm25Maintainer:
             # driver collect (r14, guide §1.2): same exact long adds,
             # one fewer action per tick
             cur_stats = self.spark.read.parquet(
-                os.path.join(self._meta_dir(v), "stats")
+                os.path.join(self._state_path(v), "stats")
             ).select(
                 F.col("n_docs").alias("_n"), F.col("total_dl").alias("_t")
             )
@@ -231,83 +175,22 @@ class Bm25Maintainer:
             futs = [
                 pool.submit(
                     lambda: merged_dict.write.mode("overwrite").parquet(
-                        os.path.join(self._meta_dir(nxt), "dictionary")
+                        os.path.join(self._state_path(nxt), "dictionary")
                     )
                 ),
                 pool.submit(
                     lambda: merged_stats.coalesce(1)
                     .write.mode("overwrite")
-                    .parquet(os.path.join(self._meta_dir(nxt), "stats"))
+                    .parquet(os.path.join(self._state_path(nxt), "stats"))
                 ),
             ]
             for f in futs:
                 f.result()
         self._commit(
-            {
-                **self._meta,  # preserves checkpoint_token and format
-                "version": nxt,
-                "last_batch_id": batch_id,
-                "batches": self._meta["batches"] + [bname],
-            }
+            version=nxt,
+            last_batch_id=batch_id,
+            batches=self._meta["batches"] + [bname],
         )
-
-    def bind_checkpoint(self, token: str) -> None:
-        """Same guard as ``AggMaintainer.bind_checkpoint`` (review r3):
-        foreachBatch ids restart at 0 when a streaming checkpoint is
-        recreated, and the last_batch_id watermark would then absorb
-        real data as "redelivery". A different checkpoint must fail
-        loudly; a maintainer with no recorded token adopts the first."""
-        stored = self._meta.get("checkpoint_token")
-        if stored is None:
-            self._commit({**self._meta, "checkpoint_token": token})
-            return
-        if stored != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: BM25 maintainer state was "
-                f"built under checkpoint {stored!r} but this run uses "
-                f"{token!r}; batch ids would restart and the redelivery "
-                "watermark would silently drop data. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        """foreachBatch wrapper (the ``AggMaintainer`` pattern): resolve
-        the checkpoint IDENTITY once the query exists and bind it before
-        delegating, so a recreated checkpoint at the same path fails
-        loudly instead of replaying batch ids into the watermark."""
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df, batch_id):
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new document files from ``source_dir`` into the index.
-        The streaming checkpoint makes file discovery incremental —
-        each file's docs are tokenized and folded exactly once, which
-        is precisely the maintainer's append-only contract."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     # -- maintenance -------------------------------------------------------
     def compact(self) -> None:
@@ -333,12 +216,13 @@ class Bm25Maintainer:
             .write.mode("overwrite")
             .parquet(self._batch_dir(cname))
         )
-        self._commit({**self._meta, "batches": [cname]})
+        old_batches = self._meta["batches"]
+        self._commit(batches=[cname])
         # old batch dirs are debris the pointer no longer references;
         # GC is idempotent (a crash here just leaves orphans)
         import shutil
 
-        for b in self._meta["batches"]:
+        for b in old_batches:
             if b != cname:
                 shutil.rmtree(self._batch_dir(b), ignore_errors=True)
 
@@ -356,10 +240,10 @@ class Bm25Maintainer:
                 *[self._batch_dir(b) for b in self._meta["batches"]]
             ),
             "dictionary": self.spark.read.parquet(
-                os.path.join(self._meta_dir(v), "dictionary")
+                os.path.join(self._state_path(v), "dictionary")
             ),
             "stats": self.spark.read.parquet(
-                os.path.join(self._meta_dir(v), "stats")
+                os.path.join(self._state_path(v), "stats")
             ).select(
                 "n_docs", (F.col("total_dl") / F.col("n_docs")).alias("avgdl")
             ),

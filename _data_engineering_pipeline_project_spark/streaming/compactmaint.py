@@ -18,7 +18,8 @@ This module is that loop composed from Spark primitives:
   stats prune reads on the clustered column(s).
 - **Commit** follows the house `Scd2Table` protocol: the compacted
   generation lands in a fresh ``gen_v{N}`` directory, then a
-  ``_CURRENT`` pointer file swaps atomically (``os.replace``) — readers
+  ``_CURRENT`` pointer file swaps atomically and durably
+  (``streaming/state.py:commit_pointer``) — readers
   resolve the pointer and never see a half-written generation; a
   crashed compaction leaves an orphan directory, not a broken table.
   Files that arrive DURING a compaction are not lost: they stay in the
@@ -43,6 +44,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from _data_engineering_pipeline_project_spark.streaming.state import (
+    commit_pointer,
+)
 
 _POINTER = "_CURRENT"
 _MANIFEST = "_CONSUMED"
@@ -143,10 +148,7 @@ class CompactionMaintainer:
         return os.path.join(self.table_dir, f"gen_v{version}")
 
     def _commit(self, version: int) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._pointer_path())  # atomic on POSIX
+        commit_pointer(self._pointer_path(), version)
 
     def _consumed(self, version: int | None) -> set[str]:
         """Basenames of landing files already folded into ``version``

@@ -45,6 +45,10 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from _data_engineering_pipeline_project_spark.streaming.state import (
+    drain_available_now,
+)
+
 
 class FanoutDrain:
     """Drain one stream into many maintainers.
@@ -132,15 +136,11 @@ class FanoutDrain:
         shared streaming checkpoint; each file's rows tick each
         maintainer exactly once (per-maintainer watermarks absorb
         crash replays)."""
-        stream = (
-            spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
+        drain_available_now(
+            spark,
+            source_dir,
+            schema,
+            checkpoint_dir,
+            self.hook(checkpoint_dir),
+            source_format,
         )
-        q = (
-            stream.writeStream.foreachBatch(self.hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
